@@ -36,6 +36,14 @@ object GraftSession {
       // Spark 4 rejects without this (session-level setup, not a loader
       // side effect — see Tables.events for the conversion)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // generated-class cache: a JVM running daily pipeline runs and their
+      // analyst reads fills ~250 entries, past Spark's 100-entry default,
+      // which made every daily run recompile ~175 classes. Static conf:
+      // read once, when the JVM first generates code.
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
+      // name generated classes without the per-plan codegen stage id, so one
+      // stage shape compiles once whatever its position in the plan
+      .config("spark.sql.codegen.useIdInClassName", "false")
 
   /** Get-or-create and register the SQL-callable function surface. */
   def get(master: String = s"local[$cpus]"): SparkSession = {

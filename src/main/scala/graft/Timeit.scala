@@ -86,6 +86,8 @@ object Timeit {
       // ReusedExchange/AQEShuffleRead nodes visible), the evidence a
       // static pre-execution dump cannot show (guide §7.2)
       if (sys.env.get("SPARK_GRAFT_FINAL_PLAN").contains("1")) {
+        // own job description: keeps these jobs apart from the timed reps'
+        spark.sparkContext.setJobDescription(s"finalplan:$name")
         try {
           val df = fn(spark, sfDir)
           df.queryExecution.executedPlan.execute().count()

@@ -2,6 +2,7 @@ package graft.changefeed
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.plans.expressions.runValue
 import graft.storage.VersionedTable
 
 /** Spark-native emulation of a table change stream (CDC feed with a
@@ -59,6 +60,8 @@ final class ChangeFeed(spark: SparkSession, val name: String, root: String) {
     * two distinct literal seed prefixes — independently-seeded streams, not
     * the correlated forward/reversed trick (reversal preserves pairwise
     * structure, so adversarial inputs could collide both halves together).
+    * The batch id is a [[graft.plans.expressions.RunValue]], so every
+    * publish reuses one generated class.
     */
   private def stamp(df: DataFrame, action: String, isUpdate: Boolean,
                     batchId: Long): DataFrame = {
@@ -69,7 +72,7 @@ final class ChangeFeed(spark: SparkSession, val name: String, root: String) {
     df.withColumn(ACTION, lit(action))
       .withColumn(IS_UPDATE, lit(isUpdate))
       .withColumn(ROW_ID, concat(half("graft_rowid_h1"), half("graft_rowid_h2")))
-      .withColumn(BATCH_ID, lit(batchId))
+      .withColumn(BATCH_ID, runValue(batchId))
   }
 
   /** Producer side: record a batch of changes. Returns the batch id. */
@@ -133,6 +136,7 @@ final class ChangeFeed(spark: SparkSession, val name: String, root: String) {
   def pending(consumedBatchId: Long): DataFrame = {
     if (!log.exists)
       throw new IllegalStateException(s"stream $name has no published batches")
+    // a literal bound, not a run value: the parquet scan pushes it down
     val raw = log.read.filter(col(BATCH_ID) > consumedBatchId)
     if (lastMutationBatchId <= consumedBatchId) return raw  // pure appends
     val dataCols = raw.columns.filterNot(metaColumns.contains).toSeq

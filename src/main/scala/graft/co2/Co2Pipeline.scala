@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.changefeed.ChangeFeed
 import graft.functions.Co2Functions
 import graft.operators.{MergeInto, OrderedLag}
+import graft.plans.expressions.runValue
 import graft.storage.VersionedTable
 
 /** The full incremental pipeline — raw → harmonized → analytics — with the
@@ -103,7 +104,7 @@ final class Co2Pipeline(spark: SparkSession, warehouseRoot: String) {
       .filter(col(ChangeFeed.ACTION) === "INSERT")
       .drop(ChangeFeed.metaColumns: _*)
 
-    val batchTs = current_timestamp() // evaluated once per merge batch below
+    val batchTs = runTimestamp()
     val source = pending
       .withColumn("DATE",
         to_date(concat_ws("-",
@@ -146,13 +147,13 @@ final class Co2Pipeline(spark: SparkSession, warehouseRoot: String) {
     if (!harmonized.exists) return "No harmonized data - nothing to analyze"
     val harm = harmonized.read
 
-    // minmax injected as literals — the reference's collect-to-lit pattern
+    // minmax injected as run values — the reference's collect-to-lit pattern
     val mmRow = (if (minMax.exists) minMax.read else harm.agg(
       min(col("CO2_PPM")).as("MIN_CO2"), max(col("CO2_PPM")).as("MAX_CO2")))
       .collect().head
-    val minCo2 = mmRow.getDouble(0)
-    val maxCo2 = mmRow.getDouble(1)
-    val batchTs = current_timestamp()
+    val minCo2 = runValue(mmRow.getDouble(0))
+    val maxCo2 = runValue(mmRow.getDouble(1))
+    val batchTs = runTimestamp() // daily and weekly rows share one stamp
 
     // daily: lag over date order (partitioned+stitched, exact global result)
     val daily = OrderedLag.byDate(
@@ -161,7 +162,7 @@ final class Co2Pipeline(spark: SparkSession, warehouseRoot: String) {
         col("DATE"), col("CO2_PPM"), col("PREV_DAY_CO2"),
         Co2Functions.co2PercentChange(col("PREV_DAY_CO2"), col("CO2_PPM")).as("DAILY_CHANGE"),
         Co2Functions.co2Volatility(col("CO2_PPM"), col("PREV_DAY_CO2")).as("DAILY_VOLATILITY"),
-        Co2Functions.normalizeCo2(col("CO2_PPM"), lit(minCo2), lit(maxCo2)).as("NORMALIZED_CO2"),
+        Co2Functions.normalizeCo2(col("CO2_PPM"), minCo2, maxCo2).as("NORMALIZED_CO2"),
         batchTs.as("META_UPDATED_AT"))
     // weekly: Monday-truncated buckets; the reference labels the weekly
     // MIN/MAX as WEEK_START_CO2/WEEK_END_CO2 — replicated faithfully, and
@@ -177,7 +178,7 @@ final class Co2Pipeline(spark: SparkSession, warehouseRoot: String) {
         col("WEEK_START_CO2"), col("WEEK_END_CO2"),
         Co2Functions.co2PercentChange(col("WEEK_START_CO2"), col("WEEK_END_CO2")).as("WEEKLY_CHANGE"),
         Co2Functions.co2Volatility(col("WEEK_END_CO2"), col("WEEK_START_CO2")).as("WEEKLY_VOLATILITY"),
-        Co2Functions.normalizeCo2(col("AVG_WEEKLY_CO2"), lit(minCo2), lit(maxCo2)).as("NORMALIZED_WEEKLY_CO2"),
+        Co2Functions.normalizeCo2(col("AVG_WEEKLY_CO2"), minCo2, maxCo2).as("NORMALIZED_WEEKLY_CO2"),
         batchTs.as("META_UPDATED_AT"))
 
     // key-unique by construction: harmonized is keyed by DATE and OrderedLag
@@ -192,6 +193,7 @@ final class Co2Pipeline(spark: SparkSession, warehouseRoot: String) {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.util.{Failure, Try}
     val dF = Future(withScaledResources("LARGE") {
       MergeInto(spark, dailyStats, daily, Seq("DATE"),
         checkDuplicateKeys = false)
@@ -200,8 +202,14 @@ final class Co2Pipeline(spark: SparkSession, warehouseRoot: String) {
       MergeInto(spark, weeklyStats, weekly, Seq("WEEK_START"),
         checkDuplicateKeys = false)
     })
-    val dr = Await.result(dF, Duration.Inf)
-    val wr = Await.result(wF, Duration.Inf)
+    // await BOTH before surfacing a failure: no merge outlives the call
+    // unobserved, and the first failure carries the other as suppressed
+    val done = Seq(dF, wF).map(f => Try(Await.result(f, Duration.Inf)))
+    done.collect { case Failure(e) => e } match {
+      case first +: rest => rest.foreach(first.addSuppressed); throw first
+      case _ =>
+    }
+    val Seq(dr, wr) = done.map(_.get)
 
     s"Analytics: daily ${dr.updated}u/${dr.inserted}i, weekly ${wr.updated}u/${wr.inserted}i"
   }
@@ -301,6 +309,10 @@ final class Co2Pipeline(spark: SparkSession, warehouseRoot: String) {
 
 object Co2Pipeline {
   val STREAM_NAME = "RAW_CO2.CO2_DATA_STREAM"
+
+  /** `META_UPDATED_AT` for one phase call: the wall clock as a run value,
+    * so the generated code stays the same from one run to the next. */
+  private def runTimestamp() = runValue(java.time.Instant.now())
 
   def apply(spark: SparkSession, warehouseRoot: String): Co2Pipeline =
     new Co2Pipeline(spark, warehouseRoot)

@@ -2,6 +2,7 @@ package graft.co2
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.plans.expressions.runValue
 import java.sql.Date
 
 /** NOAA Mauna Loa feed ingestion — distributed re-expression of the
@@ -129,8 +130,9 @@ object NoaaIngest {
   }
 
   /** Keep only rows strictly newer than the watermark (reference filters in
-    * pandas at loading_data_sp/function.py:187-193; here it's a pushed-down
-    * predicate).
+    * pandas at loading_data_sp/function.py:187-193). The watermark is a run
+    * value, not a literal, so each day's ingest reuses one generated class;
+    * the text source has no filter pushdown to lose.
     */
   def newerThan(df: DataFrame, wm: Option[Date]): DataFrame = wm match {
     case None => df
@@ -139,6 +141,6 @@ object NoaaIngest {
         to_date(concat_ws("-",
           lpad(col("YEAR").cast("string"), 4, "0"),
           lpad(col("MONTH").cast("string"), 2, "0"),
-          lpad(col("DAY").cast("string"), 2, "0")), "yyyy-MM-dd") > lit(d))
+          lpad(col("DAY").cast("string"), 2, "0")), "yyyy-MM-dd") > runValue(d))
   }
 }

@@ -4,7 +4,8 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
@@ -113,6 +114,30 @@ object expressions {
     }
     override protected def withNewChildInternal(c: Expression): DotConst = copy(child = c)
     override def prettyName: String = "dot_const"
+  }
+
+  /** A per-run constant (batch id, run timestamp, watermark, min/max) that
+    * generated code reads from the plan's reference array. A `lit` is
+    * spliced into the Java source, so two runs that differ only in such a
+    * value compile two classes; with this leaf they produce the same
+    * source and share one cached class. `value` is in Catalyst's internal
+    * form (see [[runValue]]). Not foldable — folding would turn it back
+    * into a literal — so it must not stand where a data-source filter
+    * needs a literal to push down.
+    */
+  case class RunValue(value: Any, dataType: DataType) extends LeafExpression {
+    require(value != null, "run_value needs a non-null value")
+    override def nullable: Boolean = false
+    override def foldable: Boolean = false
+    override def eval(input: InternalRow): Any = value
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      val jt = CodeGenerator.javaType(dataType)
+      val ref = ctx.addReferenceObj("runValue", value, CodeGenerator.boxedType(dataType))
+      val v = if (CodeGenerator.isPrimitiveType(dataType)) s"$ref.${jt}Value()" else ref
+      ev.copy(code = code"final $jt ${ev.value} = $v;", isNull = FalseLiteral)
+    }
+    override def sql: String = Literal(value, dataType).sql
+    override def prettyName: String = "run_value"
   }
 
   /** Product-quantization encode (see [[graft.operators.Similarity]] PQ
@@ -524,6 +549,11 @@ object expressions {
     col(CosineSimilarity(ex(a), ex(b)))
   def jaroWinkler(a: Column, b: Column): Column =
     col(JaroWinkler(ex(a), ex(b)))
+  /** `v` (a Scala/Java value `lit` accepts) as a [[RunValue]]. */
+  def runValue(v: Any): Column = {
+    val l = Literal(v)
+    col(RunValue(l.value, l.dataType))
+  }
   def dotConst(c: Column, q: Array[Double]): Column = col(DotConst(ex(c), q))
   def randomProject(c: Column, masks: Array[Long]): Column =
     col(RandomProject(ex(c), masks))

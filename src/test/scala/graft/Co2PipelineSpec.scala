@@ -121,6 +121,23 @@ class Co2PipelineSpec extends AnyFunSuite {
       .head.getLong(0) == 0) // fully consumed
   }
 
+  test("analytics awaits both merges: daily failure surfaces after weekly commits") {
+    val dir = Files.createTempDirectory("co2_merge_fail_")
+    val feed = dir.resolve("feed.txt")
+    writeFeed(feed, LocalDate.of(2020, 1, 1), LocalDate.of(2021, 1, 1))
+    val p = Co2Pipeline(spark, dir.resolve("warehouse").toString)
+    p.runPipeline(feed.toString)
+    // a daily table under an incompatible schema: its merge fails at once
+    p.dailyStats.overwrite(Seq((java.sql.Date.valueOf("2020-01-01"), 1.0))
+      .toDF("DATE", "OTHER"))
+    val weeklyBefore = p.weeklyStats.versions.max
+    val e = intercept[IllegalArgumentException](p.analytics())
+    assert(e.getMessage.contains("merge schema mismatch"), e.getMessage)
+    assert(e.getSuppressed.isEmpty, e.getSuppressed.toSeq)
+    // the weekly merge was awaited, so its commit landed before the throw
+    assert(p.weeklyStats.versions.max == weeklyBefore + 1)
+  }
+
   test("parseText tolerates 6th column, comments, malformed numerics") {
     val f = Files.createTempFile("noaa_", ".txt")
     Files.writeString(f,

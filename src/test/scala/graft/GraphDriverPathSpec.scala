@@ -98,4 +98,16 @@ class GraphDriverPathSpec extends AnyFunSuite {
         s"walks disagree at len=$len walksPerNode=$wpn")
     }
   }
+
+  test("SPARK_GRAFT_DRIVER_EDGE_LIMIT: a bad value fails naming the setting") {
+    import graft.operators.DriverPath
+    assert(DriverPath.parseLimit(None).isEmpty)
+    assert(DriverPath.parseLimit(Some(" 0 ")).contains(0L))
+    assert(DriverPath.parseLimit(Some("5000")).contains(5000L))
+    for (bad <- Seq("", "12k", "1e6", "-1")) {
+      val e = intercept[IllegalArgumentException](DriverPath.parseLimit(Some(bad)))
+      assert(e.getMessage.contains("SPARK_GRAFT_DRIVER_EDGE_LIMIT") &&
+        e.getMessage.contains(s"'$bad'"), e.getMessage)
+    }
+  }
 }

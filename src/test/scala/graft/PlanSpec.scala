@@ -200,6 +200,36 @@ class PlanSpec extends AnyFunSuite {
     assert(q.collect().map(_.getDouble(0)).toSeq == Seq(2.0))
   }
 
+  test("run values keep per-run constants out of the generated source") {
+    import org.apache.spark.sql.functions._
+    import graft.plans.expressions.runValue
+    def sources(v: Any => org.apache.spark.sql.Column, batch: Long, at: String) =
+      spark.range(8)
+        .select((col("id") + v(batch)).as("b"),
+          v(java.sql.Timestamp.valueOf(at)).as("ts"))
+        .queryExecution.debug.codegenToSeq().map(_._2)
+    val day1 = ("2025-06-01 10:00:00", 41L)
+    val day2 = ("2025-06-02 10:00:00", 42L)
+    val run1 = sources(runValue, day1._2, day1._1)
+    assert(run1.nonEmpty && run1.exists(_.contains("references[")), run1)
+    assert(run1 == sources(runValue, day2._2, day2._1))
+    // the same values as literals are spliced into the Java text
+    assert(sources(lit, day1._2, day1._1) != sources(lit, day2._2, day2._1))
+  }
+
+  test("change-feed pending read still pushes the _BATCH_ID bound to parquet") {
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("plan_feed_").toString
+    val feed = graft.changefeed.ChangeFeed(spark, "S", root)
+    feed.publish(Seq((1, 1.0)).toDF("k", "v"))
+    feed.publish(Seq((2, 2.0)).toDF("k", "v"))
+    val pending = feed.pending(1L)
+    val p = pending.queryExecution.executedPlan.toString
+    assert("PushedFilters: \\[[^\\]]*GreaterThan\\(_BATCH_ID,1\\)".r
+      .findFirstIn(p).nonEmpty, p)
+    assert(pending.select("k", "_BATCH_ID").as[(Int, Long)].collect().toSeq == Seq((2, 2L)))
+  }
+
   test("q01: aggregation is partial (map-side) before the exchange") {
     val p = planOf("q01_pricing_summary")
     assert(p.contains("partial_sum") || p.contains("HashAggregate"), p)
