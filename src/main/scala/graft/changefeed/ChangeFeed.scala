@@ -21,8 +21,8 @@ import graft.storage.VersionedTable
   * (co2_harmonized_sp/function.py:119-153).
   *
   * At 100 TB: the log is partitioned parquet, pending() is a pushed-down
-  * range filter on `_BATCH_ID` (partition-pruned), and nothing is ever
-  * rewritten — appends only.
+  * range filter on `_BATCH_ID` whose per-part zone maps skip every
+  * consumed part unopened, and nothing is ever rewritten — appends only.
   */
 final class ChangeFeed(spark: SparkSession, val name: String, root: String) {
 
@@ -136,8 +136,9 @@ final class ChangeFeed(spark: SparkSession, val name: String, root: String) {
   def pending(consumedBatchId: Long): DataFrame = {
     if (!log.exists)
       throw new IllegalStateException(s"stream $name has no published batches")
-    // a literal bound, not a run value: the parquet scan pushes it down
-    val raw = log.read.filter(col(BATCH_ID) > consumedBatchId)
+    // a literal bound, not a run value: the parquet scan pushes it down,
+    // and each part's _BATCH_ID zone map skips the consumed parts unopened
+    val raw = log.readWhere(col(BATCH_ID) > consumedBatchId)
     if (lastMutationBatchId <= consumedBatchId) return raw  // pure appends
     val dataCols = raw.columns.filterNot(metaColumns.contains).toSeq
     val ins = col(ACTION) === "INSERT"
@@ -168,7 +169,7 @@ final class ChangeFeed(spark: SparkSession, val name: String, root: String) {
   def pendingAppendOnly(consumedBatchId: Long): DataFrame = {
     if (!log.exists)
       throw new IllegalStateException(s"stream $name has no published batches")
-    log.read.filter(col(BATCH_ID) > consumedBatchId && col(ACTION) === "INSERT")
+    log.readWhere(col(BATCH_ID) > consumedBatchId && col(ACTION) === "INSERT")
   }
 
   /** SYSTEM\$STREAM_HAS_DATA equivalent — O(1) metadata check, no scan. */

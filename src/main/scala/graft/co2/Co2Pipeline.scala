@@ -23,7 +23,7 @@ final class Co2Pipeline(spark: SparkSession, warehouseRoot: String) {
 
   // collectStats = false: these layer tables hold ~19k rows in a handful
   // of scan tasks — zone maps have nothing to skip, while the per-commit
-  // footer harvest is a real cost on this 34-commit-per-run pipeline
+  // footer harvest is a real cost on a pipeline that commits 7 times a run
   val raw         = VersionedTable(spark, s"$warehouseRoot/RAW_CO2/CO2_DATA", collectStats = false)
   val feed        = ChangeFeed(spark, STREAM_NAME, s"$warehouseRoot/RAW_CO2/CO2_DATA_STREAM")
   val harmonized  = VersionedTable(spark, s"$warehouseRoot/HARMONIZED_CO2/HARMONIZED_CO2", collectStats = false)
@@ -262,10 +262,6 @@ final class Co2Pipeline(spark: SparkSession, warehouseRoot: String) {
 
   // -------------------------------------------------------------- sql -----
 
-  /** Register every layer as temp views (dots → underscores) plus the
-    * stream view with metadata columns, so `spark.sql` covers the
-    * reference's raw-SQL entry point (EP3).
-    */
   /** Register the warehouse as a real `spark.catalog` catalog: every layer
     * becomes addressable as `<name>.<SCHEMA>.<TABLE>` with SHOW TABLES /
     * DESCRIBE / SELECT / INSERT working as SQL text against the versioned
@@ -294,17 +290,6 @@ final class Co2Pipeline(spark: SparkSession, warehouseRoot: String) {
   def defineTasks(schedule: String = "USING CRON 0 10 * * * UTC"): Unit =
     VersionedTable(spark, s"$warehouseRoot/_TASKS", collectStats = false)
       .overwrite(tasks(schedule))
-
-  def registerViews(): Unit = {
-    if (raw.exists) raw.read.createOrReplaceTempView("RAW_CO2_CO2_DATA")
-    if (harmonized.exists) harmonized.read.createOrReplaceTempView("HARMONIZED_CO2_HARMONIZED_CO2")
-    if (dailyStats.exists) dailyStats.read.createOrReplaceTempView("ANALYTICS_CO2_DAILY_CO2_STATS")
-    if (weeklyStats.exists) weeklyStats.read.createOrReplaceTempView("ANALYTICS_CO2_WEEKLY_CO2_STATS")
-    if (minMax.exists) minMax.read.createOrReplaceTempView("ANALYTICS_CO2_MINMAX")
-    val consumed = harmonized.offsets.getOrElse(STREAM_NAME, 0L)
-    if (feed.log.exists)
-      feed.pending(consumed).createOrReplaceTempView("CO2_DATA_STREAM")
-  }
 }
 
 object Co2Pipeline {

@@ -2,7 +2,10 @@ package graft.storage
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions.{coalesce, col, count, lit, not, struct, when}
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StringType, StructField, StructType}
 import org.apache.spark.util.sketch.BloomFilter
 import java.nio.charset.StandardCharsets
@@ -307,12 +310,34 @@ final class VersionedTable(spark: SparkSession, val root: String,
     * runs per call — a visible per-commit cost in commit-heavy pipelines.
     * Fields are relaxed to nullable (an older part may hold NULLs in a
     * column the latest batch happened to commit as NOT NULL).
+    *
+    * The relation is the one `DataFrameReader` builds (so pushdown, column
+    * pruning and shadowed-partition path pruning are unchanged), but its
+    * file index lists through the session's [[VersionedTable.listings]]
+    * cache: committed part dirs are write-once (per-attempt dir names), so
+    * a listing never goes stale, and a read lists only the parts no earlier
+    * read has seen — not every `_pt=` dir again in a parallel-listing job.
     */
   private def parquetRead(s: State, paths: Seq[String]): DataFrame =
     s.schemaDdl match {
       case Some(d) =>
-        val relaxed = StructType(StructType.fromDDL(d).map(_.copy(nullable = true)))
-        spark.read.schema(relaxed).parquet(paths: _*)
+        val schema = ColumnBridge.asNullable(StructType.fromDDL(d))
+        val conf = spark.sparkContext.hadoopConfiguration
+        val listings = VersionedTable.listings(spark)
+        val dirs = paths.map { p =>
+          val path = new Path(p)
+          val dirFs = path.getFileSystem(conf)
+          val qualified = dirFs.makeQualified(path)
+          // the index reads a missing root dir as empty: a lost part must
+          // fail the read, never silently drop its rows
+          if (listings.getLeafFiles(qualified).isEmpty && !dirFs.exists(qualified))
+            throw new java.io.FileNotFoundException(
+              s"committed part dir $qualified of table at $root is missing")
+          qualified
+        }
+        val index = new InMemoryFileIndex(spark, dirs, Map.empty, Some(schema), listings)
+        spark.baseRelationToDataFrame(HadoopFsRelation(index, index.partitionSchema,
+          schema, None, new ParquetFileFormat, Map.empty)(spark))
       case None => spark.read.parquet(paths: _*)
     }
 
@@ -1324,6 +1349,19 @@ object VersionedTable {
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
   private[storage] def claimLock(root: String): Object =
     claimLocks.computeIfAbsent(root, _ => new Object)
+
+  /** One part-dir listing cache client per session. Every
+    * `FileStatusCache.getOrCreate` call opens a fresh namespace, so a
+    * client made per read never hits; this one is shared by every read in
+    * the session and bounded by Spark's
+    * `spark.sql.hive.filesourcePartitionFileCacheSize` LRU.
+    */
+  private val listingCaches =
+    new java.util.WeakHashMap[SparkSession, FileStatusCache]()
+  private def listings(spark: SparkSession): FileStatusCache =
+    listingCaches.synchronized {
+      listingCaches.computeIfAbsent(spark, s => FileStatusCache.getOrCreate(s))
+    }
 
   /** `collectStats = false` skips the per-commit zone-map footer harvest
     * — the right call for small, commit-heavy layer tables (a table that

@@ -20,4 +20,10 @@ object ColumnBridge {
       : org.apache.spark.sql.DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
+  /** `StructType.asNullable` is private[spark]: the recursive relaxation
+    * `DataFrameReader` applies to a user schema (nested fields included).
+    */
+  def asNullable(s: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType = s.asNullable
 }

@@ -113,12 +113,33 @@ class Co2PipelineSpec extends AnyFunSuite {
     assert(defs("CO2_ANALYTICS_TASK")._1 == "AFTER CO2_HARMONIZED_TASK")
 
     // SQL surface (EP3): stream + tables resolvable from raw SQL
-    p.registerViews()
+    p.registerCatalog("co2_e2e")
     assert(spark.sql(
-      "SELECT count(*) FROM HARMONIZED_CO2_HARMONIZED_CO2").head.getLong(0) == rows2)
+      "SELECT count(*) FROM co2_e2e.HARMONIZED_CO2.HARMONIZED_CO2").head.getLong(0) == rows2)
     assert(spark.sql(
-      "SELECT count(*) FROM CO2_DATA_STREAM WHERE `METADATA$ACTION`='INSERT'")
+      "SELECT count(*) FROM co2_e2e.RAW_CO2.CO2_DATA_STREAM WHERE `METADATA$ACTION`='INSERT'")
       .head.getLong(0) == 0) // fully consumed
+  }
+
+  test("a daily run re-lists no committed part dir: 0 parallel listing jobs") {
+    import org.apache.spark.metrics.source.HiveCatalogMetrics.METRIC_PARALLEL_LISTING_JOB_COUNT
+    val dir = Files.createTempDirectory("co2_listing_")
+    val p = Co2Pipeline(spark, dir.resolve("warehouse").toString)
+    // 36 YEAR partitions: above Spark's 32-path parallel-listing threshold
+    val feed1 = dir.resolve("feed1.txt")
+    writeFeed(feed1, LocalDate.of(1985, 1, 1), LocalDate.of(2020, 12, 30))
+    val jobs0 = METRIC_PARALLEL_LISTING_JOB_COUNT.getCount
+    p.runPipeline(feed1.toString)
+    val jobs1 = METRIC_PARALLEL_LISTING_JOB_COUNT.getCount
+    assert(jobs1 > jobs0, "the fixture must cross the parallel-listing threshold")
+    // the next day's republished feed: one new row in the last YEAR
+    val feed2 = dir.resolve("feed2.txt")
+    writeFeed(feed2, LocalDate.of(1985, 1, 1), LocalDate.of(2020, 12, 31))
+    val res2 = p.runPipeline(feed2.toString)
+    assert(res2.exists(_._2.contains("loaded 1 rows")), res2.toString)
+    assert(METRIC_PARALLEL_LISTING_JOB_COUNT.getCount == jobs1,
+      "a second run listed committed part dirs in a parallel job")
+    assert(p.harmonized.read.count() == p.raw.read.count())
   }
 
   test("analytics awaits both merges: daily failure surfaces after weekly commits") {

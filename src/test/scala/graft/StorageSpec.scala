@@ -463,6 +463,55 @@ class StorageSpec extends AnyFunSuite {
     }
   }
 
+  test("repeated reads list no committed part dir; a rewrite lists only its new part") {
+    import org.apache.spark.metrics.source.HiveCatalogMetrics.{METRIC_FILES_DISCOVERED, METRIC_PARALLEL_LISTING_JOB_COUNT}
+    def listed() = (METRIC_FILES_DISCOVERED.getCount, METRIC_PARALLEL_LISTING_JOB_COUNT.getCount)
+    val root = tmp() + "/listing"
+    val t = VersionedTable(spark, root, collectStats = false)
+    // 40 partition values: above Spark's 32-path parallel-listing threshold
+    t.overwritePartitions((0 until 40).map(y => (y, y * 10L)).toDF("y", "x"), "y")
+    val first = t.read.as[(Int, Long)].collect().toSet
+    val before = listed()
+    val second = t.read.as[(Int, Long)].collect().toSet
+    assert(listed() == before, "a second read listed part dirs again")
+    assert(second == first && first.size == 40)
+
+    t.overwritePartitions(Seq((7, -1L)).toDF("y", "x"), "y")
+    val newDir = new java.io.File(s"$root/${t.state.get.parts.last.dir}/_pt=7")
+    val newFiles = newDir.listFiles().count(f => !f.getName.startsWith(".") &&
+      !f.getName.startsWith("_"))
+    val (files0, jobs0) = listed()
+    val third = t.read.as[(Int, Long)].collect().toSet
+    val (files1, jobs1) = listed()
+    assert(files1 - files0 == newFiles && jobs1 == jobs0,
+      s"discovered ${files1 - files0} files in ${jobs1 - jobs0} jobs; expected $newFiles in 0")
+    assert(third == first - ((7, 70L)) + ((7, -1L)))
+  }
+
+  test("a deleted committed part dir fails the read instead of dropping its rows") {
+    def rmrf(f: java.io.File): Unit = {
+      Option(f.listFiles()).foreach(_.foreach(rmrf)); f.delete()
+    }
+    // never read before: the missing dir is caught before planning
+    val root = tmp() + "/lost"
+    val t = VersionedTable(spark, root, collectStats = false)
+    t.append(Seq((1, "a")).toDF("k", "v"))
+    t.append(Seq((2, "b")).toDF("k", "v"))
+    val lost = t.state.get.parts.last.dir
+    rmrf(new java.io.File(s"$root/$lost"))
+    val e = intercept[java.io.FileNotFoundException](t.read)
+    assert(e.getMessage.contains(lost), e.getMessage)
+
+    // read (and listed) before the loss: the scan fails on the missing files
+    val root2 = tmp() + "/lost2"
+    val t2 = VersionedTable(spark, root2, collectStats = false)
+    t2.append(Seq((1, "a")).toDF("k", "v"))
+    t2.append(Seq((2, "b")).toDF("k", "v"))
+    assert(t2.read.count() == 2)
+    rmrf(new java.io.File(s"$root2/${t2.state.get.parts.last.dir}"))
+    intercept[Exception](t2.read.collect())
+  }
+
   test("MergeInto partitionBy: incremental merge leaves untouched partition dirs alone") {
     val root = tmp() + "/pt2"
     val t = VersionedTable(spark, root)

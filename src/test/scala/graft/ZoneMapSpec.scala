@@ -43,6 +43,17 @@ class ZoneMapSpec extends AnyFunSuite {
     assert(prunedFiles < allFiles, s"$prunedFiles vs $allFiles")
   }
 
+  test("change-feed pending reads open only the unconsumed parts") {
+    val feed = graft.changefeed.ChangeFeed(spark, "zm_stream", tmp() + "/log")
+    (1 to 3).foreach(i => feed.publish(Seq((i, s"v$i")).toDF("k", "v")))
+    val last = feed.log.state.get.parts.last.dir
+    for (pending <- Seq(feed.pending(2L), feed.pendingAppendOnly(2L))) {
+      val files = pending.inputFiles
+      assert(files.nonEmpty && files.forall(_.contains(s"/$last/")), files.toSeq)
+      assert(pending.select("k").as[Int].collect().toSeq == Seq(3))
+    }
+  }
+
   test("string zone maps prune bytewise; doubles prune; equality and IN work") {
     val t = threeRangeParts(tmp())
     assert(t.pruneStats(col("tag") === "c_2024")._1 == 1)
